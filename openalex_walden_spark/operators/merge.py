@@ -29,12 +29,29 @@ the key — the full out-of-order contract, not just the upsert half.
 Layout::
 
     state_path/
-      manifest_v00000002.json     # {"n_buckets": N, "buckets": {"3": 2}}
-      buckets/3/v_00000002/part-*.parquet   # immutable
+      manifest_v00000002.json     # {"n_buckets": N, "keys": [...],
+                                  #  "schema": {...}, "buckets": {"3": 2}}
+      buckets/3/v_00000002/part-*.parquet   # immutable, one file
+
+Each bucket version is exactly one Parquet file: a merge shuffles the
+target ∪ batch union once, hash-partitioned by bucket, and ranks per
+(bucket, keys) — the same winners as per keys, since the bucket is a
+pure function of the keys — so the window adds no second exchange and
+the partitioned writer gets each bucket's rows in one task. A merge
+therefore runs in at most min(touched buckets, shuffle partitions)
+tasks; ``n_buckets``, changed through :func:`rebucket_state`, is the
+parallelism lever. Per-file and per-job costs, not rows, dominate small
+merges, which is why one file per bucket pays.
+
+The manifest carries the state's schema, so reads pass it to
+``spark.read.schema`` and run no Parquet schema-inference job. A
+manifest written before the schema field falls back to inference, and
+its next commit backfills the schema (as with ``keys``).
 
 No driver-side data loops: the only collected values are the touched
 bucket ids (≤ n_buckets scalars — the same driver-scalar budget as the
-reference's DECLARE VARIABLE high-water mark).
+reference's DECLARE VARIABLE high-water mark). A batch that touches no
+bucket commits nothing.
 """
 
 from __future__ import annotations
@@ -47,6 +64,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 _M_RE = re.compile(r"^manifest_v(\d{8})\.json$")
@@ -75,24 +93,43 @@ def merge_upsert(
       survives out-of-order deletes across merges, use
       :func:`merge_into_state`.
     """
+    winners = _winners(target, source, keys, sequence_col, tie_breaker)
+    if delete_predicate is not None:
+        winners = winners.where(~F.coalesce(delete_predicate, F.lit(False)))
+    return winners
+
+
+def _winners(
+    target: DataFrame | None,
+    source: DataFrame,
+    partition: Sequence[str],
+    sequence_col: str,
+    tie_breaker: str | None,
+    cluster_by: str | None = None,
+) -> DataFrame:
+    """Rank target ∪ source per ``partition`` and keep rank 1.
+
+    ``cluster_by`` (a column of ``partition``) hash-partitions the union
+    first; the window's clustering requirement is then already met, so
+    the plan has that one exchange and no other.
+    """
     src = source.withColumn("_is_source", F.lit(1))
     if target is None:
         unioned = src
     else:
         unioned = target.withColumn("_is_source", F.lit(0)).unionByName(src)
+    if cluster_by is not None:
+        unioned = unioned.repartition(F.col(cluster_by))
 
     order = [F.col(sequence_col).desc(), F.col("_is_source").desc()]
     if tie_breaker:
         order.append(F.col(tie_breaker).desc())
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-    winners = (
+    w = Window.partitionBy(*[F.col(c) for c in partition]).orderBy(*order)
+    return (
         unioned.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn", "_is_source")
     )
-    if delete_predicate is not None:
-        winners = winners.where(~F.coalesce(delete_predicate, F.lit(False)))
-    return winners
 
 
 # ---------------------------------------------------------------------------
@@ -142,6 +179,20 @@ def _bucket_expr(keys: Sequence[str], n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
+def _read_buckets(
+    spark: SparkSession, paths: Sequence[str], manifest: dict
+) -> DataFrame:
+    """Read bucket version dirs with the manifest's schema (no inference
+    job); a manifest that predates the schema field falls back to
+    inference, and its next commit backfills the schema."""
+    stored = manifest.get("schema")
+    reader = spark.read if stored is None else spark.read.schema(StructType.fromJson(stored))
+    df = reader.parquet(*paths)
+    if _TOMBSTONE not in df.columns:
+        df = df.withColumn(_TOMBSTONE, F.lit(False))
+    return df
+
+
 def read_state(
     spark: SparkSession,
     state_path: str,
@@ -162,9 +213,7 @@ def read_state(
     ]
     if not paths:
         return None
-    df = spark.read.parquet(*paths)
-    if _TOMBSTONE not in df.columns:
-        df = df.withColumn(_TOMBSTONE, F.lit(False))
+    df = _read_buckets(spark, paths, manifest)
     if include_tombstones:
         return df
     return df.where(~F.col(_TOMBSTONE)).drop(_TOMBSTONE)
@@ -184,11 +233,12 @@ def merge_into_state(
     """One partition-pruned MERGE round against a bucketed state table.
 
     Reads only the buckets the batch touches, window-merges them with
-    the batch (one shuffle over touched data, never the whole table),
-    writes each touched bucket as a new immutable version directory, and
-    commits a manifest pointing untouched buckets at their existing
-    files. Deletes become tombstones (see module doc). Returns the live
-    state.
+    the batch in one shuffle clustered by bucket (touched data only,
+    never the whole table), writes each touched bucket as a new
+    immutable single-file version directory, and commits a manifest
+    pointing untouched buckets at their existing files. Deletes become
+    tombstones (see module doc). A batch that touches no bucket commits
+    nothing. Returns the live state.
 
     ``n_buckets`` is fixed at state creation (persisted in the
     manifest); later calls inherit it.
@@ -200,7 +250,7 @@ def merge_into_state(
         prev_buckets: dict[str, int] = dict(manifest["buckets"])
         _check_keys(manifest, keys, state_path)
     else:
-        prev_buckets = {}
+        manifest, prev_buckets = {}, {}
 
     tomb = (
         F.coalesce(delete_predicate, F.lit(False))
@@ -214,31 +264,28 @@ def merge_into_state(
     touched = sorted(
         r[0] for r in batch2.select(_BUCKET).distinct().collect() if r[0] is not None
     )
+    if not touched:
+        return read_state(spark, state_path)
     touched_paths = [
         _bucket_dir(state_path, b, prev_buckets[str(b)])
         for b in touched
         if str(b) in prev_buckets
     ]
     if touched_paths:
-        target = spark.read.parquet(*touched_paths)
-        if _TOMBSTONE not in target.columns:
-            target = target.withColumn(_TOMBSTONE, F.lit(False))
-        target = target.withColumn(_BUCKET, bexpr)
+        target = _read_buckets(spark, touched_paths, manifest).withColumn(_BUCKET, bexpr)
     else:
         target = None
 
     # Tombstones ride through the window as ordinary rows: a stored
     # tombstone beats an older-sequence late upsert; a newer upsert
-    # legitimately resurrects the key.
-    merged = merge_upsert(
-        target, batch2, keys, sequence_col, delete_predicate=None, tie_breaker=tie_breaker
+    # legitimately resurrects the key. The bucket is a pure function of
+    # the keys, so ranking per (bucket, keys) picks the same winners as
+    # per keys, while the shuffle clusters each bucket into one task.
+    merged = _winners(
+        target, batch2, [_BUCKET, *keys], sequence_col, tie_breaker, cluster_by=_BUCKET
     )
-
-    next_v = (prev_v or 0) + 1
-    staging = os.path.join(state_path, f"_staging_v{next_v:08d}")
-    merged.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
-    _commit_staged(
-        state_path, staging, next_v, n_buckets, keys,
+    _write_staged(
+        merged, state_path, (prev_v or 0) + 1, n_buckets, keys,
         base_buckets=prev_buckets, touched=touched, keep_versions=keep_versions,
     )
     return read_state(spark, state_path)
@@ -258,9 +305,9 @@ def _check_keys(manifest: dict, keys: Sequence[str], state_path: str) -> None:
         )
 
 
-def _commit_staged(
+def _write_staged(
+    df: DataFrame,
     state_path: str,
-    staging: str,
     next_v: int,
     n_buckets: int,
     keys: Sequence[str],
@@ -268,11 +315,21 @@ def _commit_staged(
     touched: Sequence[int] | None,
     keep_versions: int,
 ) -> None:
-    """Atomically promote a staged partitionBy(_BUCKET) write: move each
-    staged bucket dir to its versioned home, commit the manifest (the
-    atomic point), vacuum. ``touched`` limits which bucket pointers may
-    change (incremental merge); None promotes every staged bucket and
-    starts from ``base_buckets`` as given (rebucket passes {})."""
+    """Write ``df`` (already clustered by ``_BUCKET``, so each bucket
+    arrives in one task and lands as one file) partitioned by bucket
+    into a staging dir, then promote it atomically: move each staged
+    bucket dir to its versioned home, commit the manifest (the atomic
+    point), vacuum. ``touched`` limits which bucket pointers may change
+    (incremental merge); None promotes every staged bucket and starts
+    from ``base_buckets`` as given (rebucket passes {})."""
+    staging = os.path.join(state_path, f"_staging_v{next_v:08d}")
+    df.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
+    # nullable, as a file read returns it, so the stored schema does not
+    # flip between commits of fresh and re-read rows
+    schema = StructType([
+        StructField(f.name, f.dataType, True, f.metadata)
+        for f in df.schema.fields if f.name != _BUCKET
+    ])
     staged: dict[int, str] = {}
     for name in os.listdir(staging):
         m = re.match(rf"^{_BUCKET}=(\d+)$", name)
@@ -302,6 +359,7 @@ def _commit_staged(
     manifest_out = {
         "n_buckets": n_buckets,
         "keys": list(keys),
+        "schema": schema.jsonValue(),
         "buckets": new_buckets,
     }
     tmp = os.path.join(state_path, f"_manifest_v{next_v:08d}.tmp")
@@ -366,12 +424,8 @@ def rebucket_state(
     _check_keys(_read_manifest(state_path, prev_v), keys, state_path)
     full = read_state(spark, state_path, include_tombstones=True)
     staged = full.withColumn(_BUCKET, _bucket_expr(keys, n_buckets_new))
-
-    next_v = prev_v + 1
-    staging = os.path.join(state_path, f"_staging_v{next_v:08d}")
-    staged.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
-    _commit_staged(
-        state_path, staging, next_v, n_buckets_new, keys,
+    _write_staged(
+        staged.repartition(F.col(_BUCKET)), state_path, prev_v + 1, n_buckets_new, keys,
         base_buckets={}, touched=None, keep_versions=keep_versions,
     )
     return read_state(spark, state_path)

@@ -59,10 +59,18 @@ def run_scd1_stream(
 
     Each micro-batch is (optionally) transformed, MERGEd into the state
     (sequencing protects against out-of-order batches), and appended to
-    the change-log for downstream chaining (St3). ``availableNow``
-    processes everything pending then stops — the reference's nightly
-    cadence.
+    the change-log for downstream chaining (St3). The change-log's
+    ``_change_type`` is ``"delete"`` where ``delete_predicate`` holds and
+    ``"upsert"`` elsewhere, so a chained stage can use
+    ``F.lower(F.col("_change_type")) == "delete"`` as its own delete
+    predicate (St3 feeding St4). ``availableNow`` processes everything
+    pending then stops — the reference's nightly cadence.
     """
+
+    change_type = F.lit("upsert")
+    if delete_predicate is not None:
+        is_delete = F.coalesce(delete_predicate, F.lit(False))
+        change_type = F.when(is_delete, F.lit("delete")).otherwise(change_type)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if transform is not None:
@@ -80,7 +88,7 @@ def run_scd1_stream(
         if changelog_path is not None:
             (
                 batch_df.withColumn("_batch_id", F.lit(batch_id))
-                .withColumn("_change_type", F.lit("upsert"))
+                .withColumn("_change_type", change_type)
                 .write.mode("append")
                 .parquet(changelog_path)
             )

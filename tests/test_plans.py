@@ -1548,3 +1548,42 @@ def test_laureate_prize_two_window_exchanges(spark, sf_dir):
     df = q.CATALOG["laureate_prize_parse"].spark(spark, sf_dir)
     opt = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
     assert len(opt) < 150_000, f"plan blow-up: {len(opt)} chars"
+
+
+def _executed_write_plan(spark, path_fragment: str) -> str:
+    """Final (AQE) physical plan of the newest write whose plan names
+    ``path_fragment``, from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # noqa: SLF001
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()  # noqa: SLF001
+    for i in reversed(range(execs.size())):
+        desc = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc and path_fragment in desc:
+            return desc
+    raise AssertionError(f"no write to {path_fragment} recorded")
+
+
+def test_merge_write_single_exchange_clustered_by_bucket(spark, tmp_path):
+    """merge_into_state shuffles target ∪ batch once, hash-partitioned on
+    the bucket column: the window reuses that exchange, and the bucket-
+    partitioned writer needs no sort beyond the window's own."""
+    import re
+
+    from openalex_walden_spark.operators.merge import merge_into_state
+
+    state = str(tmp_path / "plan_state")
+    schema = "k int, v string, seq int"
+    b1 = spark.createDataFrame([(i, "a", 1) for i in range(200)], schema)
+    merge_into_state(spark, state, b1, ["k"], "seq", n_buckets=8)
+    b2 = spark.createDataFrame([(i, "b", 2) for i in range(0, 200, 5)], schema)
+    merge_into_state(spark, state, b2, ["k"], "seq")
+    desc = _executed_write_plan(spark, "_staging_v00000002")
+    tree, details = desc.split("== Initial Plan ==")[0], desc.split("\n\n", 1)[1]
+    exchanges = re.findall(r"\bExchange \((\d+)\)", tree)
+    sorts = re.findall(r"\bSort \((\d+)\)", tree)
+    assert len(exchanges) == 1, tree
+    args = re.search(rf"\({exchanges[0]}\) Exchange\n.*?Arguments: (.*)", details, re.S).group(1)
+    assert args.startswith("hashpartitioning(_bucket#"), args
+    assert len(sorts) == 1, tree
+    args = re.search(rf"\({sorts[0]}\) Sort .*?\n.*?Arguments: (.*)", details, re.S).group(1)
+    window_sort = r"\[_bucket#\d+ ASC NULLS FIRST, k#\d+ ASC NULLS FIRST, seq#\d+ DESC"
+    assert re.match(window_sort, args), args

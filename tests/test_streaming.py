@@ -3,6 +3,7 @@ semantics the oracle-checked catalog queries define."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -642,3 +643,152 @@ def test_stream_index_batch_retry_is_idempotent(spark, sf_dir, tmp_path):
         for r in assign_cells(e, cents, _KM_Q).select("vec_id", "cell").collect()
     )
     assert got == want, "retried batch duplicated assignment rows"
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k int, v string, seq int")
+
+
+def _bucket_dirs(state: str) -> list[str]:
+    return sorted(os.path.relpath(d, state) for d, _, _ in os.walk(os.path.join(state, "buckets")))
+
+
+def _manifests(state: str) -> dict[str, str]:
+    return {
+        n: open(os.path.join(state, n)).read()
+        for n in sorted(os.listdir(state))
+        if n.startswith("manifest_v")
+    }
+
+
+def _parquet_files_per_version(state: str, version: int) -> dict[str, int]:
+    """bucket → number of .parquet files in its ``v_<version>`` dir."""
+    out = {}
+    for b in os.listdir(os.path.join(state, "buckets")):
+        vdir = os.path.join(state, "buckets", b, f"v_{version:08d}")
+        if os.path.isdir(vdir):
+            out[b] = sum(1 for f in os.listdir(vdir) if f.endswith(".parquet"))
+    return out
+
+
+def test_empty_batch_merge_is_noop(spark, tmp_path):
+    """A batch that touches no bucket writes nothing, commits no new
+    manifest and vacuums nothing: every retained manifest and bucket
+    directory is as it was."""
+    from openalex_walden_spark.operators.merge import current_version
+
+    state = str(tmp_path / "noop_state")
+    merge_into_state(spark, state, _kv(spark, [(i, "a", 1) for i in range(50)]), ["k"], "seq", n_buckets=4)
+    merge_into_state(spark, state, _kv(spark, [(1, "b", 2)]), ["k"], "seq")
+    v, manifests, dirs = current_version(state), _manifests(state), _bucket_dirs(state)
+
+    out = merge_into_state(spark, state, _kv(spark, []), ["k"], "seq")
+    assert current_version(state) == v
+    assert _manifests(state) == manifests
+    assert _bucket_dirs(state) == dirs
+    assert not [n for n in os.listdir(state) if n.startswith("_staging")]
+    assert out.count() == 50
+
+
+def test_changelog_delete_propagates_to_chained_stage(spark, tmp_path):
+    """St3 feeding St4: stage 1 labels its deletes in the change-log, and
+    stage 2, streaming that change-log with the reference's
+    ``lower(_change_type) = 'delete'`` predicate, ends with the same
+    live state — the deleted key gone from both."""
+    schema = "k int, v string, seq bigint, op string"
+    src = str(tmp_path / "two_stage_src")
+    os.makedirs(src)
+    arrivals = [
+        [(1, "a", 1, "U"), (2, "b", 1, "U"), (3, "c", 1, "U")],
+        [(2, None, 2, "D"), (3, "c2", 2, "U")],
+    ]
+    for i, rows in enumerate(arrivals):
+        path = os.path.join(src, f"changes-{i}.json")
+        with open(path, "w") as f:
+            for k, v, seq, op in rows:
+                f.write(json.dumps({"k": k, "v": v, "seq": seq, "op": op}) + "\n")
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # arrival order
+    changelog = str(tmp_path / "two_stage_changelog")
+    run_scd1_stream(
+        file_stream(spark, src, spark.createDataFrame([], schema).schema, max_files_per_trigger=1),
+        state_path=str(tmp_path / "stage1"),
+        checkpoint_path=str(tmp_path / "stage1_ckpt"),
+        keys=["k"],
+        sequence_col="seq",
+        delete_predicate=F.col("op") == "D",
+        changelog_path=changelog,
+    )
+    log = spark.read.parquet(changelog)
+    assert sorted((r["k"], r["seq"], r["_change_type"]) for r in log.collect()) == [
+        (1, 1, "upsert"), (2, 1, "upsert"), (2, 2, "delete"), (3, 1, "upsert"), (3, 2, "upsert"),
+    ]
+
+    run_scd1_stream(
+        file_stream(spark, changelog, log.schema, fmt="parquet"),
+        state_path=str(tmp_path / "stage2"),
+        checkpoint_path=str(tmp_path / "stage2_ckpt"),
+        keys=["k"],
+        sequence_col="seq",
+        delete_predicate=F.lower(F.col("_change_type")) == "delete",
+    )
+    stage1 = {r["k"]: r["v"] for r in latest_state(spark, str(tmp_path / "stage1")).collect()}
+    stage2 = {r["k"]: r["v"] for r in latest_state(spark, str(tmp_path / "stage2")).collect()}
+    assert stage1 == stage2 == {1: "a", 3: "c2"}
+
+
+def test_each_bucket_version_is_one_file(spark, tmp_path):
+    """Merges shuffle once, clustered by bucket, so every bucket version
+    a merge or a rebucket commits holds exactly one parquet file."""
+    from openalex_walden_spark.operators.merge import rebucket_state
+
+    state = str(tmp_path / "one_file_state")
+    b1 = _kv(spark, [(i, f"v{i}", 1) for i in range(400)]).repartition(4)
+    merge_into_state(spark, state, b1, ["k"], "seq", n_buckets=8)
+    assert _parquet_files_per_version(state, 1) == {str(b): 1 for b in range(8)}
+    b2 = _kv(spark, [(i, "w", 2) for i in range(0, 400, 3)]).repartition(4)
+    merge_into_state(spark, state, b2, ["k"], "seq")
+    assert _parquet_files_per_version(state, 2) == {str(b): 1 for b in range(8)}
+    rebucket_state(spark, state, ["k"], n_buckets_new=5)
+    assert _parquet_files_per_version(state, 3) == {str(b): 1 for b in range(5)}
+    final = {r["k"]: r["v"] for r in read_state(spark, state).collect()}
+    assert len(final) == 400 and final[3] == "w" and final[4] == "v4"
+
+
+def test_read_state_runs_no_spark_job(spark, tmp_path):
+    """The manifest carries the schema, so building the state DataFrame
+    runs no schema-inference job; only acting on it does."""
+    state = str(tmp_path / "no_job_state")
+    merge_into_state(spark, state, _kv(spark, [(i, "a", 1) for i in range(30)]), ["k"], "seq", n_buckets=4)
+    sc = spark.sparkContext
+    group = "read-state-job-probe"
+    sc.setJobGroup(group, "count the jobs read_state runs")
+    try:
+        df = read_state(spark, state)
+        built = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert df.count() == 30
+        ran = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert built == [] and ran  # the probe does see the count's jobs
+
+
+def test_manifest_without_schema_reads_and_backfills(spark, tmp_path):
+    """A manifest written before the schema field reads by inference,
+    and the next commit writes the schema back into the manifest."""
+    from openalex_walden_spark.operators.merge import _read_manifest, current_version
+
+    state = str(tmp_path / "legacy_schema_state")
+    merge_into_state(spark, state, _kv(spark, [(i, f"v{i}", 1) for i in range(20)]), ["k"], "seq", n_buckets=4)
+    v = current_version(state)
+    manifest = _read_manifest(state, v)
+    stored = manifest.pop("schema")
+    with open(os.path.join(state, f"manifest_v{v:08d}.json"), "w") as f:
+        json.dump(manifest, f)
+
+    live = {r["k"]: r["v"] for r in read_state(spark, state).collect()}
+    assert live == {i: f"v{i}" for i in range(20)}
+    merge_into_state(spark, state, _kv(spark, [(0, "new", 2)]), ["k"], "seq")
+    assert _read_manifest(state, current_version(state))["schema"] == stored
+    final = {r["k"]: r["v"] for r in read_state(spark, state).collect()}
+    assert len(final) == 20 and final[0] == "new" and final[1] == "v1"
